@@ -118,7 +118,7 @@ object Bench {
     // 2.78 s warm, same code). The warm-up set covers each engine
     // path the headline exercises: a parquet scan+agg, a generated-
     // star query (also triggers the one-time star parquet write +
-    // checksum validation so no timed query pays it), an iterative
+    // digest validation so no timed query pays it), an iterative
     // multi-job graph fixpoint, and a banded-join dedup.
     locally {
       val s = root.newSession()

@@ -12,28 +12,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Parquet schemas never change under a run; caching them means the
-  // second and later load of a table skips the footer read entirely
-  // (schema inference is the only reason `spark.read.parquet` touches
-  // the file at plan time). Keyed by path so different sf dirs coexist.
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
     // reader rejects outright; read it as raw long nanos and truncate
     // to micros — the same truncation DuckDB applies, so oracle
     // comparisons agree.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/$name.parquet"
-    val cached = schemaCache.get(path)
-    val df =
-      if (cached != null) spark.read.schema(cached).parquet(path)
-      else {
-        val d = spark.read.parquet(path)
-        schemaCache.put(path, d.schema)
-        d
-      }
+    // the schema comes from the file's footer, so loading a table runs
+    // no Spark job
+    val df = ParquetFooters.read(spark, s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) {
       case (d, f) if f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType =>
         d.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))

@@ -30,7 +30,7 @@ object Verify {
       }
     }
     // Materialize the generated TPC-DS star for this sf (a no-op when
-    // the checksum-gated scratch parquet already verifies) BEFORE the
+    // the digest-gated scratch parquet already verifies) BEFORE the
     // oracle dump, so the dumped prefix always points at real files —
     // even when a trailing-args subset skipped every generator query.
     try graft.operators.TpcdsGen2.registerViews(spark, sfDir)

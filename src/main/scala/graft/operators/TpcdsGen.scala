@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.ParquetFooters
 
 /** A deterministic TPC-DS data GENERATOR plus REAL TPC-DS queries over
   * the generated star schema — the container ships no TPC-DS corpus
@@ -71,12 +71,13 @@ object TpcdsGen {
     * benchmark session forever AND missed across the fresh-session-
     * per-query batteries. A dir's parquet is never rewritten within a
     * run (the test corpus is driver-generated, read-only), so no
-    * mtime invalidation is needed. */
+    * mtime invalidation is needed. The count is read from lineitem's
+    * parquet footers, so it costs no Spark job. */
   private val nSalesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[operators] def nSales(s: SparkSession, dir: String): Long =
     nSalesCache.computeIfAbsent(dir,
-      _ => Tables.load(s, dir, "lineitem").count()).longValue()
+      _ => ParquetFooters.rowCount(s, s"$dir/lineitem.parquet")).longValue()
 
   // ---- multi-line ticket structure (r14) ---------------------------
   //
@@ -597,7 +598,7 @@ object TpcdsGen {
   private[operators] def genStoreReturns(s: SparkSession, n: Long): DataFrame =
     storeReturnsFromIds(s.range(1, n + 1).toDF("id"))
 
-  // ---- public star-schema surface: checksum-gated parquet ----------
+  // ---- public star-schema surface: digest-gated parquet ----------
   //
   // Every table the queries touch reads the scratch parquet that
   // TpcdsStar materialized from the gen* closed forms (once per fact
@@ -893,7 +894,7 @@ object TpcdsGen {
         expr(e.replace("#div#", "div")).as(c0) }: _*)
 
   /** The shared DuckDB CTE prefix — every query's oracle SQL starts
-    * with this. Since r15 it reads the checksum-gated parquet star
+    * with this. Since r15 it reads the digest-gated parquet star
     * [[TpcdsStar]] materialized (the same files Spark scans — the
     * gate reads generated FILES, like the reference's
     * TpcdsTestProgram); the closed-form regeneration text below

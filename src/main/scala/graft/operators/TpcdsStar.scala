@@ -1,10 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.security.{DigestInputStream, MessageDigest}
 
-/** Materializes the generated TPC-DS star schema to checksum-gated
+import graft.ParquetFooters
+
+/** Materializes the generated TPC-DS star schema to digest-gated
   * scratch PARQUET, once per (fact volume, generator version) — both
   * the Spark engine and the DuckDB oracle then read the same files,
   * exactly like the reference's e2e gate reads dsdgen output files
@@ -22,16 +24,29 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * single source of truth — they are what gets WRITTEN (and what the
   * streaming twins replay through [[TpcdsGen.storeSalesFromIds]]), so
   * file content can never drift from the generator definition; the
-  * checksum gate turns any on-disk corruption or version skew into
+  * digest gate turns any on-disk corruption or version skew into
   * regeneration instead of silent wrong answers.
   *
   * Layout (under java.io.tmpdir, overridable via SPARK_GRAFT_STAR_DIR):
   *   dims_<sig>/            fixed-size tables — dim ring + inventory
   *   facts_n<N>_<sig>/      the six sales/returns facts at |lineitem|=N
   * Each directory holds <table>.parquet/ plus a _GRAFT_OK marker with
-  * one `table count xor-of-xxhash64` row per table; a dir is trusted
-  * only after those checksums re-verify against the files (once per
-  * JVM). <sig> hashes the generator version + the string-typed closed
+  * one `table sha256 file...` row per table: the sorted names of the
+  * table's data files and a SHA-256 over their names, lengths and
+  * bytes, computed right after the write. A dir is trusted only after
+  * the marker re-computes identically from the files (once per JVM).
+  * The gate is a driver-side file digest rather than a row checksum
+  * (count + xor of xxhash64, through r17) for two reasons: it needs no
+  * Spark job, where the row checksum scanned every star row at each
+  * JVM's first use; and it catches strictly more. Any damage that
+  * changes rows changes bytes, so truncated, zeroed, missing, flipped
+  * and stray files all fail it; but damage that leaves every row
+  * intact also fails it, where the full-scan row checksum passes — a
+  * flipped min/max statistic that lets pushdown skip a row group a
+  * filtered query needs, or a stray empty part file.
+  * Schemas come from the parquet footers ([[ParquetFooters]]), so a
+  * validated star registers with no Spark job at all.
+  * <sig> hashes the generator version + the string-typed closed
   * forms, so editing a mixer lands in a FRESH directory automatically;
   * Scala-typed generator edits must bump [[GEN_VERSION]].
   *
@@ -58,8 +73,10 @@ object TpcdsStar {
     "web_sales", "web_returns")
 
   /** Bump on ANY generator change not captured by the string-typed
-    * closed forms (dim projections, channel mixers live as Scala). */
-  private val GEN_VERSION = "r15.2"
+    * closed forms (dim projections, channel mixers live as Scala), and
+    * on any change to the _GRAFT_OK marker format, so stars gated the
+    * old way never share a directory with the new ones. */
+  private val GEN_VERSION = "r15.3"
 
   private def root: String =
     sys.env.getOrElse("SPARK_GRAFT_STAR_DIR",
@@ -93,62 +110,60 @@ object TpcdsStar {
       .mkString("WITH ", ",\n", "\n")
   }
 
-  // dirs whose _GRAFT_OK checksums re-verified against the files in
+  // dirs whose _GRAFT_OK digests re-verified against the files in
   // this JVM — the gate runs once, not per query
   private val validated = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Test hook: forget per-JVM validation so the next ensure re-runs
-    * the checksum gate against the files. */
+    * the digest gate against the files. */
   private[graft] def forgetValidation(): Unit = validated.clear()
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def dim(s: SparkSession, table: String): DataFrame = {
     ensureDims(s)
-    read(s, s"$dimsDir/$table.parquet")
+    ParquetFooters.read(s, s"$dimsDir/$table.parquet")
   }
 
   def fact(s: SparkSession, n: Long, table: String): DataFrame = {
     ensureFacts(s, n)
-    read(s, s"${factsDir(n)}/$table.parquet")
-  }
-
-  /** Schema cached globally by path (a StructType holds no session
-    * reference — the r14 WeakHashMap lesson) so repeat reads skip
-    * footer inference; the scan itself stays a plain DataSource v1
-    * parquet relation with full pushdown. */
-  private def read(s: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
-    s.read.schema(sch).parquet(path)
+    ParquetFooters.read(s, s"${factsDir(n)}/$table.parquet")
   }
 
   def ensureDims(s: SparkSession): String =
-    ensure(s, dimsDir, DIMS.map(t => t -> (() => TpcdsGen.genDim(s, t))))
+    ensure(dimsDir, DIMS.map(t => t -> (() => TpcdsGen.genDim(s, t))))
 
   def ensureFacts(s: SparkSession, n: Long): String = {
     ensureDims(s)
-    val d = ensure(s, factsDir(n),
+    val d = ensure(factsDir(n),
       FACTS.map(t => t -> (() => TpcdsGen.genFact(s, t, n))))
     lastFactsDir = d
     d
   }
 
-  /** count + order-insensitive xor of per-row xxhash64 over all
-    * columns — cheap one-pass content gate (xor alone would let
-    * duplicate-row pairs cancel; the count closes that hole for the
-    * realistic corruption modes: truncated/zeroed/missing files). */
-  private def checksum(s: SparkSession, path: String): (Long, Long) = {
-    val r = s.read.parquet(path)
-      .selectExpr("count(*) AS c", "coalesce(bit_xor(xxhash64(*)), 0L) AS h")
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** The _GRAFT_OK text for `names` under `dir`: per table, the SHA-256
+    * over each data file's name, length and bytes, then the sorted file
+    * names. Data files are the ones Spark reads (not `_`/`.`-prefixed),
+    * so a stray extra part file changes the text too. */
+  private def marker(dir: String, names: Seq[String]): String =
+    names.map { name =>
+      val table = Paths.get(dir, s"$name.parquet")
+      val files = Option(table.toFile.list())
+        .getOrElse(throw new java.nio.file.NoSuchFileException(table.toString))
+        .filterNot(f => f.startsWith("_") || f.startsWith(".")).sorted
+      val md = MessageDigest.getInstance("SHA-256")
+      files.foreach { f =>
+        val p = table.resolve(f)
+        md.update(s"$f ${Files.size(p)}\n".getBytes("UTF-8"))
+        val in = new DigestInputStream(Files.newInputStream(p), md)
+        try in.transferTo(java.io.OutputStream.nullOutputStream()) finally in.close()
+      }
+      (name +: md.digest().map(b => f"$b%02x").mkString +: files).mkString(" ")
+    }.mkString("", "\n", "\n")
 
-  private def ensure(s: SparkSession, dir: String,
+  private def ensure(dir: String,
       tables: Seq[(String, () => DataFrame)]): String = synchronized {
     if (validated.contains(dir)) return dir
-    val marker = Paths.get(dir, "_GRAFT_OK")
-    if (Files.exists(marker) && marksVerify(s, dir, marker)) {
+    val names = tables.map(_._1)
+    if (marksVerify(dir, names)) {
       validated.add(dir)
       return dir
     }
@@ -170,14 +185,10 @@ object TpcdsStar {
     }
     val tmp = Paths.get(
       dir + ".tmp-" + ProcessHandle.current().pid() + "-" + System.nanoTime())
-    val lines = tables.map { case (name, build) =>
-      val path = s"$tmp/$name.parquet"
-      val df = build()
-      df.write.mode("overwrite").parquet(path)
-      val (c, h) = checksum(s, path)
-      s"$name $c $h"
+    tables.foreach { case (name, build) =>
+      build().write.mode("overwrite").parquet(s"$tmp/$name.parquet")
     }
-    Files.writeString(tmp.resolve("_GRAFT_OK"), lines.mkString("", "\n", "\n"))
+    Files.writeString(tmp.resolve("_GRAFT_OK"), marker(tmp.toString, names))
     // Losing the publish race surfaces differently by platform/timing:
     // FileAlreadyExistsException from the move, DirectoryNotEmptyException
     // when rename(2) lands on a re-created non-empty directory (ENOTEMPTY),
@@ -189,25 +200,16 @@ object TpcdsStar {
            _: java.nio.file.DirectoryNotEmptyException |
            _: java.nio.file.AccessDeniedException =>
         deleteRecursively(tmp) // another JVM won the race; trust its gate
-        require(Files.exists(marker) && marksVerify(s, dir, marker),
-          s"concurrent TPC-DS star at $dir failed its checksum gate")
+        require(marksVerify(dir, names),
+          s"concurrent TPC-DS star at $dir failed its digest gate")
     }
     validated.add(dir)
     dir
   }
 
-  private def marksVerify(s: SparkSession, dir: String, marker: Path): Boolean =
-    try {
-      val want = Files.readAllLines(marker)
-      !want.isEmpty && want.stream().allMatch { line =>
-        line.split(" ") match {
-          case Array(name, c, h) =>
-            val p = s"$dir/$name.parquet"
-            Files.exists(Paths.get(p)) && checksum(s, p) == ((c.toLong, h.toLong))
-          case _ => false
-        }
-      }
-    } catch { case _: Throwable => false }
+  private def marksVerify(dir: String, names: Seq[String]): Boolean =
+    try Files.readString(Paths.get(dir, "_GRAFT_OK")) == marker(dir, names)
+    catch { case _: java.io.IOException => false }
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {

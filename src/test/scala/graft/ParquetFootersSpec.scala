@@ -1,0 +1,65 @@
+package graft
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.types.LongType
+import graft.operators.TpcdsStar
+
+/** The footer helper must say exactly what Spark's own inference and
+  * `count()` say, since every plan-time reader of the input tables and
+  * of the TPC-DS star now takes its schema and row count from it.
+  */
+class ParquetFootersSpec extends SparkSpec {
+
+  private val n = 6000L  // |lineitem| at sf0.001
+
+  private def starPaths: Seq[String] = {
+    val facts = TpcdsStar.ensureFacts(spark, n)
+    TpcdsStar.DIMS.map(t => s"${TpcdsStar.dimsDir}/$t.parquet") ++
+      TpcdsStar.FACTS.map(t => s"$facts/$t.parquet")
+  }
+
+  /** An events table whose ts is parquet TIMESTAMP(NANOS), the layout
+    * some generators ship and Spark can read only through nanosAsLong. */
+  private def nanosEvents(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos-events").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sessionState.newHadoopConf()).build()
+    val rows = new SimpleGroupFactory(schema)
+    try Seq(1L -> 1700000000123456789L, 2L -> 1700000001987654321L).foreach {
+      case (id, ts) => w.write(rows.newGroup().append("event_id", id).append("ts", ts))
+    } finally w.close()
+    dir
+  }
+
+  test("footer schemas equal spark.read.parquet's inferred schemas for the ten " +
+      "input tables, the 24 star tables and a TIMESTAMP(NANOS) events.ts") {
+    // Tables.load reads every input table with nanosAsLong on
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val nanos = nanosEvents()
+    val paths = Tables.names.map(t => s"$sfDir/$t.parquet") ++ starPaths :+
+      s"$nanos/events.parquet"
+    assert(paths.size === 35)
+    paths.foreach { p =>
+      assert(ParquetFooters.schema(spark, p) === spark.read.parquet(p).schema, p)
+    }
+    assert(ParquetFooters.schema(spark, paths.last)("ts").dataType === LongType)
+    // and the loaded table still truncates the nanos to micros
+    val ts = Tables.load(spark, nanos, "events").orderBy("event_id")
+      .selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
+    assert(ts === Seq(1700000000123456L, 1700000001987654L))
+  }
+
+  test("footer row counts equal count() for lineitem and store_sales") {
+    val paths = Seq(s"$sfDir/lineitem.parquet",
+      s"${TpcdsStar.ensureFacts(spark, n)}/store_sales.parquet")
+    paths.foreach { p =>
+      assert(ParquetFooters.rowCount(spark, p) === spark.read.parquet(p).count(), p)
+    }
+    assert(ParquetFooters.rowCount(spark, paths.head) === n)
+  }
+}

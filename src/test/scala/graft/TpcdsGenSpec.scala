@@ -104,18 +104,105 @@ class TpcdsGenSpec extends SparkSpec {
 
   test("the star checksum gate regenerates a corrupted directory instead of " +
       "serving silent wrong answers") {
+    import java.nio.file.{Files, Path, Paths}
     import graft.operators.TpcdsStar
     val n2 = 1300L
     val before = G.storeSales(spark, n2).count()
     assert(before === n2)
-    // corrupt one data file on disk, then force the gate to re-run
-    val dir = java.nio.file.Paths.get(TpcdsStar.factsDir(n2), "store_sales.parquet")
-    val part = java.nio.file.Files.list(dir)
-      .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-    java.nio.file.Files.write(part, Array[Byte](0, 1, 2, 3))
+    val dir = Paths.get(TpcdsStar.factsDir(n2), "store_sales.parquet")
+    def dataFile(): Path = Files.list(dir)
+      .filter(p => p.getFileName.toString.matches("part-.*\\.parquet")).findFirst().get()
+    // corrupt the files on disk, force the gate to re-run, and expect
+    // a regenerated star: every rewrite names its part files afresh
+    def regenerates(corrupt: Path => Unit): Unit = {
+      val part = dataFile()
+      corrupt(part)
+      TpcdsStar.forgetValidation()
+      assert(G.storeSales(spark, n2).count() === n2,
+        "the gate must have re-materialized the corrupted star")
+      assert(!Files.exists(part), s"$part survived the gate")
+    }
+    // truncated to four bytes
+    regenerates(part => Files.write(part, Array[Byte](0, 1, 2, 3)))
+    // same length, one byte flipped mid-file
+    regenerates { part =>
+      val bytes = Files.readAllBytes(part)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+      Files.write(part, bytes)
+    }
+    // a stray extra data file (a copy would double every row it holds)
+    regenerates { part =>
+      Files.copy(part, dir.resolve("part-99999-stray.snappy.parquet"))
+    }
+    assert(!Files.exists(dir.resolve("part-99999-stray.snappy.parquet")))
+    // a stray empty data file: every row stays intact, which a row
+    // checksum cannot tell from a healthy star
+    val empty = Files.createTempDirectory("graft-empty-part")
+    G.storeSales(spark, n2).limit(0).write.mode("overwrite").parquet(empty.toString)
+    regenerates { _ =>
+      val part = Files.list(empty)
+        .filter(p => p.getFileName.toString.matches("part-.*\\.parquet")).findFirst().get()
+      Files.copy(part, dir.resolve("part-99998-empty.snappy.parquet"))
+    }
+  }
+
+  test("with the star validated, a fresh session registers the ten input tables " +
+      "and the TPC-DS views with zero Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.operators.TpcdsStar
+    TpcdsGen2.registerViews(spark, sfDir)
+    // the gate re-checks the star's digests as a fresh JVM would
     TpcdsStar.forgetValidation()
-    val after = G.storeSales(spark, n2).count()
-    assert(after === n2, "the gate must have re-materialized the corrupted star")
+    val sc = spark.sparkContext
+    val group = "star-setup-job-count"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "set-up under test")
+      val s = spark.newSession()
+      Tables.registerAll(s, sfDir)
+      TpcdsGen2.registerViews(s, sfDir)
+      // the listener bus delivers in order: once the fence job's start
+      // arrives, every job the set-up launched has been seen
+      sc.setJobGroup(group + "-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      var jobs = 0
+      var fenced = false
+      while (!fenced) {
+        val g = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(g != null, "the fence job's start never reached the listener")
+        if (g == group + "-fence") fenced = true
+        else if (g == group) jobs += 1
+      }
+      assert(jobs === 0, s"set-up launched $jobs Spark jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("q23's gate: with spark.graft.q23.matRows=0 the plan holds no duplicate " +
+      "store_sales subtree") {
+    def storeSalesScans(): (Int, String) = {
+      val p = plan(TpcdsGen2.q23(spark, sfDir))
+      (p.linesIterator.count(l =>
+        l.contains("Location: InMemoryFileIndex") && l.contains("/store_sales.parquet")), p)
+    }
+    // below the default threshold each consumer of the two threshold
+    // aggregates re-derives its own store_sales subtree
+    val (lazyScans, lazyPlan) = storeSalesScans()
+    assert(lazyScans > 1, lazyPlan)
+    spark.conf.set("spark.graft.q23.matRows", "0")
+    try {
+      val (matScans, matPlan) = storeSalesScans()
+      assert(matScans === 0, matPlan)
+    }
+    finally spark.conf.unset("spark.graft.q23.matRows")
   }
 
   test("q34's basket count collapses at ticket grain with every dim broadcast — " +
