@@ -22,9 +22,10 @@ import graft.functions.HammingDistance64
   * not hold universally.)
   *
   * Install at build time via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or on a
-  * live session via [[GraftExtensions.install]]
-  * (experimental.extraOptimizations — the sanctioned runtime hook).
+  * `SparkSession.builder.withExtensions(new GraftExtensions)`, which also
+  * registers [[ResolveParquetFooters]], or on a live session via
+  * [[GraftExtensions.install]] (experimental.extraOptimizations — the
+  * sanctioned runtime hook, optimizer rules only).
   */
 object SimplifySelfHamming extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -129,6 +130,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => SimplifySelfHamming)
     ext.injectOptimizerRule(_ => StatsBroadcastJoin)
+    ResolveParquetFooters.register(ext)
   }
 }
 

@@ -36,7 +36,15 @@ private[tools] final case class GatewayOp(status: String, error: String,
   * defer to.
   *
   * Each gateway session is a `newSession()` (own Spark catalog,
-  * conf and temp views on the shared context). SCOPE of that
+  * conf and temp views on the shared context) whose analyzer adds one
+  * rule, [[graft.plans.ResolveParquetFooters]]: a statement re-analyses
+  * every catalog view it names, and each `` parquet.`path` `` in a view
+  * body would otherwise run a schema-inference Spark job before the
+  * statement executes; with the rule, planning reads footers and runs
+  * none. The rule is registered once, when the gateway is constructed,
+  * on the extensions the root session shares with every `newSession()`
+  * — so the embedded gateway and the standalone `main` serve the same
+  * analyzer. SCOPE of that
   * isolation: graft's connector-DDL registries ([[graft.catalog.GraftCatalog]])
   * are process-global by design — two gateway sessions creating the
   * same connector TABLE name share (and overwrite) one registration,
@@ -57,6 +65,8 @@ final class SqlGateway(root: SparkSession, port: Int = 0) {
     */
   val PageSize = 1000
 
+  graft.plans.ResolveParquetFooters.register(root)
+
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // a pool, not the JDK default single dispatcher thread: a long
   // statement must not block other sessions' heartbeats/status polls
@@ -75,6 +85,10 @@ final class SqlGateway(root: SparkSession, port: Int = 0) {
   }
   /** The bound port (ephemeral when constructed with 0). */
   def boundPort: Int = server.getAddress.getPort
+
+  /** The Spark session behind an open session handle. */
+  private[graft] def session(handle: String): Option[SparkSession] =
+    Option(sessions.get(handle))
 
   private def respond(ex: HttpExchange, code: Int, body: ObjectNode): Unit = {
     val bytes = mapper.writeValueAsBytes(body)

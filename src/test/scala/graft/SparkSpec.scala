@@ -16,6 +16,10 @@ object TestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.plans.GraftExtensions.install(s)
+    // Build the analyzer now, before any suite registers an analyzer rule
+    // on the extensions every newSession() shares, so this session stays
+    // plain Spark whichever suite runs first.
+    s.sessionState.analyzer
     s
   }
 }
@@ -23,4 +27,42 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+}
+
+/** Counts the Spark jobs a block launches from the calling thread. */
+object JobCount {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  /** `body`'s result and the jobs it started, tagged by a job group set on
+    * this thread. The listener bus delivers in order: once a fence job's
+    * start arrives, every job `body` launched has been seen. */
+  def of[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID()}"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = body
+      sc.setJobGroup(group + "-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      var jobs = 0
+      var fenced = false
+      while (!fenced) {
+        val g = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(g != null, "the fence job's start never reached the listener")
+        if (g == group + "-fence") fenced = true
+        else if (g == group) jobs += 1
+      }
+      (result, jobs)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -3,6 +3,8 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.tools.SqlGateway
@@ -130,5 +132,57 @@ class SqlGatewaySpec extends SparkSpec {
       assert(get(port, s"/v1/sessions/$sh2/operations/$oh2/status")
         ._2.get("status").asText() === "ERROR")
     } finally g.stop()
+  }
+
+  test("a six-table join over catalog views of parquet files plans with no Spark " +
+      "job in a gateway session; two gateway sessions agree with a plain session") {
+    val tables = Seq("region", "nation", "customer", "orders", "lineitem", "supplier")
+    // catalog views, as gateway sessions see the shared catalog, not temp views
+    tables.foreach { t =>
+      spark.sql(s"CREATE OR REPLACE VIEW gwf_$t AS SELECT * FROM parquet.`$sfDir/$t.parquet`")
+    }
+    val q = """SELECT r_name, n_name, COUNT(*) AS line_count, SUM(l_linenumber) AS line_sum
+      |FROM gwf_customer JOIN gwf_orders ON c_custkey = o_custkey
+      |JOIN gwf_lineitem ON l_orderkey = o_orderkey
+      |JOIN gwf_supplier ON l_suppkey = s_suppkey
+      |JOIN gwf_nation ON s_nationkey = n_nationkey
+      |JOIN gwf_region ON n_regionkey = r_regionkey
+      |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin
+    val g = gw()
+    try {
+      val port = g.boundPort
+      // the shared session is plain Spark: one inference job per view
+      val (plainDf, plainJobs) = JobCount.of(spark)(graft.sql.GraftSql.sql(spark, q))
+      assert(plainJobs === tables.size)
+      val expected = plainDf.collect().map(_.toSeq.map(String.valueOf)).toSeq
+      assert(expected.nonEmpty)
+
+      val sh = post(port, "/v1/sessions")._2.get("sessionHandle").asText()
+      val session = g.session(sh).get
+      val (df, jobs) = JobCount.of(spark)(graft.sql.GraftSql.sql(session, q))
+      assert(jobs === 0, s"planning in a gateway session ran $jobs Spark jobs")
+      assert(df.collect().map(_.toSeq.map(String.valueOf)).toSeq === expected)
+
+      // the same statement from two gateway sessions at once, over HTTP
+      val handles = Seq.fill(2)(post(port, "/v1/sessions")._2.get("sessionHandle").asText())
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val results = handles.map { h =>
+          pool.submit(() => {
+            val oh = post(port, s"/v1/sessions/$h/statements", statement(q))
+              ._2.get("operationHandle").asText()
+            val (_, res) = get(port, s"/v1/sessions/$h/operations/$oh/result/0")
+            assert(res.get("resultType").asText() === "PAYLOAD", res.toString)
+            res.get("results").get("data").elements().asScala.map { row =>
+              row.get("fields").elements().asScala.map(_.asText()).toSeq
+            }.toSeq
+          })
+        }.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+        results.foreach(rows => assert(rows === expected))
+      } finally pool.shutdown()
+    } finally {
+      g.stop()
+      tables.foreach(t => spark.sql(s"DROP VIEW IF EXISTS gwf_$t"))
+    }
   }
 }

@@ -148,42 +148,16 @@ class TpcdsGenSpec extends SparkSpec {
 
   test("with the star validated, a fresh session registers the ten input tables " +
       "and the TPC-DS views with zero Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.operators.TpcdsStar
     TpcdsGen2.registerViews(spark, sfDir)
     // the gate re-checks the star's digests as a fresh JVM would
     TpcdsStar.forgetValidation()
-    val sc = spark.sparkContext
-    val group = "star-setup-job-count"
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "set-up under test")
+    val (_, jobs) = JobCount.of(spark) {
       val s = spark.newSession()
       Tables.registerAll(s, sfDir)
       TpcdsGen2.registerViews(s, sfDir)
-      // the listener bus delivers in order: once the fence job's start
-      // arrives, every job the set-up launched has been seen
-      sc.setJobGroup(group + "-fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      var jobs = 0
-      var fenced = false
-      while (!fenced) {
-        val g = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        assert(g != null, "the fence job's start never reached the listener")
-        if (g == group + "-fence") fenced = true
-        else if (g == group) jobs += 1
-      }
-      assert(jobs === 0, s"set-up launched $jobs Spark jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(jobs === 0, s"set-up launched $jobs Spark jobs")
   }
 
   test("q23's gate: with spark.graft.q23.matRows=0 the plan holds no duplicate " +
