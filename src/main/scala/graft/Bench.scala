@@ -144,19 +144,16 @@ object Bench {
     val names = {
       val all = SparkEntry.queries.keys.toSeq.sorted
         .filter(n => only.isEmpty || only.contains(n))
-        // the machine-derived *_sqltext rows compile to the IDENTICAL
-        // plans as their DataFrame twins (TpcdsSqlText translates the
-        // shared oracle body), so timing them doubles the generator
-        // battery for zero signal while the extra ~500 plan
-        // compilations degrade the shared JVM for every later query
-        // (measured r14: +10% on untouched families). They stay in
-        // Verify — correctness is their job; the twins carry the
-        // timing. The 3 hand-written *_sqltext rows stay benched.
+        // a *_sqltext row runs the same translated text as its base
+        // row (TpcdsSqlText), except for the six base rows that keep
+        // a DataFrame body, so timing them doubles the generator
+        // battery for no signal while the extra plan compilations
+        // degrade the shared JVM for every later query (measured r14:
+        // +10% on untouched families). They stay in Verify —
+        // correctness is their job; the base rows carry the timing.
         // The skip applies only to the FULL battery — an explicitly
         // requested sqltext query (local iteration) always runs.
-        .filterNot(n => only.isEmpty && n.endsWith("_sqltext") &&
-          !Set("q_tpcdsgen_q3_sqltext", "q_tpcdsgen_q55_sqltext",
-            "q_tpcdsgen_q98_sqltext").contains(n))
+        .filterNot(n => only.isEmpty && n.endsWith("_sqltext"))
         // Same rationale for the 97 published-text rows (r15): they
         // are CORRECTNESS rows — near-identical star plans over the
         // same materialized files as their adapted twins, which carry

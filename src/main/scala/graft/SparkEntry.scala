@@ -20,7 +20,6 @@ object SparkEntry {
     BatchQueries.queries ++ JoinQueries.queries ++ AggQueries.queries ++
       WindowQueries.queries ++ CalcSetQueries.queries ++ TvfQueries.queries ++
       MiscQueries.queries ++ TpchQueries.queries ++ TpcdsQueries.queries ++
-      TpcdsGen.queries ++ TpcdsGen2.queries ++ TpcdsGen3.queries ++
       TpcdsSqlText.queries ++ TpcdsPublished.queries ++
       StreamOracleQueries.queries ++
       LayoutQueries.queries ++ EventAnalytics.queries ++ Profiler.queries ++

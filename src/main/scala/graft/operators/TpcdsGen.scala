@@ -30,9 +30,11 @@ import graft.ParquetFooters
   * (item × warehouse) grain, and the full dim ring (date with
   * dow/week/quarter, item, customer+zip, store, promotion,
   * household_demographics, time, warehouse, ship_mode, call_center,
-  * web_site). This object holds the first 14 published query texts;
-  * [[TpcdsGen2]] carries the other 57 (71 real TPC-DS queries total,
-  * every one hash-checked against DuckDB regenerating these tables).
+  * web_site). This object holds the first 14 query texts;
+  * [[TpcdsGen2]] and [[TpcdsGen3]] hold the other 85 (99 real TPC-DS
+  * queries total, every one hash-checked against DuckDB regenerating
+  * these tables). Each text is written once, as its DuckDB oracle
+  * body, and Spark runs the same text ([[TpcdsSqlText]]).
   * Money stays integer CENTS everywhere so no engine ever rounds.
   */
 object TpcdsGen {
@@ -932,281 +934,6 @@ object TpcdsGen {
       s"web_returns AS (\n  SELECT\n${factColsSql(WR_COLS)}\n  FROM web_sales WHERE ws_order_number % 11 = 0)")
     "WITH " + parts.mkString(",\n") + "\n"
   }
-
-  // ---- the queries (real TPC-DS texts on this schema) --------------
-
-  /** TPC-DS q3: brand revenue by year for one manufacturer in one
-    * month. Fact scans once; both dims broadcast (fixed-size by
-    * construction); the d_moy filter reaches the fact only through
-    * the date join — the classic star-join pruning Catalyst handles
-    * with a broadcast hash join + (at scale) DPP on the date key.
-    */
-  def q3(s: SparkSession, dir: String): DataFrame =
-    storeSales(s, nSales(s, dir))
-      .join(broadcast(dateDim(s)), col("ss_sold_date_sk") === col("d_date_sk"))
-      .join(broadcast(item(s)), col("ss_item_sk") === col("i_item_sk"))
-      .where(col("i_manufact_id") === 28 && col("d_moy") === 11)
-      .groupBy(col("d_year"), col("i_brand_id"), col("i_brand"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("sum_agg"))
-
-  /** TPC-DS q42: category revenue for one (month, year). */
-  def q42(s: SparkSession, dir: String): DataFrame =
-    storeSales(s, nSales(s, dir))
-      .join(broadcast(dateDim(s)), col("ss_sold_date_sk") === col("d_date_sk"))
-      .join(broadcast(item(s)), col("ss_item_sk") === col("i_item_sk"))
-      .where(col("d_moy") === 11 && col("d_year") === 2000)
-      .groupBy(col("d_year"), col("i_category_id"), col("i_category"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("sum_agg"))
-
-  /** TPC-DS q52: brand revenue for one (month, year). */
-  def q52(s: SparkSession, dir: String): DataFrame =
-    storeSales(s, nSales(s, dir))
-      .join(broadcast(dateDim(s)), col("ss_sold_date_sk") === col("d_date_sk"))
-      .join(broadcast(item(s)), col("ss_item_sk") === col("i_item_sk"))
-      .where(col("d_moy") === 11 && col("d_year") === 2000)
-      .groupBy(col("d_year"), col("i_brand_id"), col("i_brand"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("ext_price"))
-
-  /** TPC-DS q55: brand revenue for one manager's items in one month. */
-  def q55(s: SparkSession, dir: String): DataFrame =
-    storeSales(s, nSales(s, dir))
-      .join(broadcast(dateDim(s)), col("ss_sold_date_sk") === col("d_date_sk"))
-      .join(broadcast(item(s)), col("ss_item_sk") === col("i_item_sk"))
-      .where(col("i_manager_id") === 28 && col("d_moy") === 11 && col("d_year") === 1999)
-      .groupBy(col("i_brand_id"), col("i_brand"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("ext_price"))
-
-  /** TPC-DS q7: per-item quantity/price averages for sales to one
-    * birth-decade cohort under non-promoted channels (customer
-    * demographics stand in for q7's cd_* columns). Averages are
-    * exact-integer sums divided once at the end, so both engines
-    * produce bit-identical doubles.
-    */
-  def q7(s: SparkSession, dir: String): DataFrame =
-    storeSales(s, nSales(s, dir))
-      .join(broadcast(customer(s)), col("ss_customer_sk") === col("c_customer_sk"))
-      .join(broadcast(promotion(s)), col("ss_promo_sk") === col("p_promo_sk"))
-      .where(col("c_birth_year").between(1940, 1949) &&
-        col("p_channel_email") === "N" && col("p_channel_event") === "N")
-      .groupBy(col("ss_item_sk"))
-      .agg(
-        count(lit(1)).as("n"),
-        (sum(col("ss_quantity")).cast("double") / count(lit(1))).as("agg1"),
-        (sum(col("ss_list_price_c")).cast("double") / count(lit(1))).as("agg2"),
-        (sum(col("ss_sales_price_c")).cast("double") / count(lit(1))).as("agg3"))
-
-  /** TPC-DS q93: per-customer net spend after subtracting returned
-    * quantity — sales LEFT JOIN returns on (ticket, item), the
-    * returned part re-priced out. The join key is the ticket (dense,
-    * uniform by construction); returns are 1/13th of sales, so the
-    * join's build side is the small one at any scale.
-    */
-  def q93(s: SparkSession, dir: String): DataFrame = {
-    val n = nSales(s, dir)
-    storeSales(s, n)
-      .join(storeReturns(s, n),
-        col("ss_ticket_number") === col("sr_ticket_number") &&
-          col("ss_item_sk") === col("sr_item_sk"), "left")
-      .select(col("ss_customer_sk"),
-        ((col("ss_quantity") - coalesce(col("sr_return_quantity"), lit(0L)))
-          * col("ss_sales_price_c")).as("act_sales_c"))
-      .groupBy(col("ss_customer_sk"))
-      .agg(sum(col("act_sales_c")).as("sumsales"))
-  }
-
-  /** TPC-DS q1: customers whose store-return total exceeds 1.2× their
-    * store's average. The correlated scalar subquery decorrelates to
-    * one per-store (sum, count) aggregate broadcast back onto the
-    * customer-grain frame, and the 1.2× cut runs in EXACT integers
-    * (total > 1.2·sum/cnt ⟺ 5·total·cnt > 6·sum — no float ever
-    * decides membership). Returns are fact-sized/13; both aggregates
-    * shuffle at return-key grain, the store dim broadcasts.
-    */
-  def q1(s: SparkSession, dir: String): DataFrame = {
-    val ctr = storeReturns(s, nSales(s, dir))
-      .groupBy(col("sr_customer_sk").as("ctr_customer_sk"),
-        col("sr_store_sk").as("ctr_store_sk"))
-      .agg(sum(col("sr_return_amt_c")).as("ctr_total_return"))
-    val perStore = ctr.groupBy(col("ctr_store_sk").as("st_sk"))
-      .agg(sum(col("ctr_total_return")).as("st_sum"), count(lit(1)).as("st_cnt"))
-    ctr
-      .join(broadcast(perStore), col("ctr_store_sk") === col("st_sk"))
-      .where(col("ctr_total_return") * col("st_cnt") * 5 > col("st_sum") * 6)
-      .join(broadcast(store(s).where(col("s_state") === "GA")),
-        col("ctr_store_sk") === col("s_store_sk"))
-      .select(col("ctr_customer_sk"), col("ctr_store_sk"), col("ctr_total_return"))
-  }
-
-  /** TPC-DS q6-shape: sales counts per category for items priced above
-    * 1.2× their category's average list price (exact-integer cut:
-    * price·cnt·5 > sum·6). The category stats are an item-sized
-    * aggregate broadcast back onto the item dim BEFORE the fact join,
-    * so the fact filters through one broadcast hash join.
-    */
-  def q6(s: SparkSession, dir: String): DataFrame = {
-    val it = item(s)
-    val catStats = it.groupBy(col("i_category_id").as("cat_id"))
-      .agg(sum(col("i_current_price_c")).as("cat_sum"), count(lit(1)).as("cat_cnt"))
-    val pricey = it
-      .join(broadcast(catStats), col("i_category_id") === col("cat_id"))
-      .where(col("i_current_price_c") * col("cat_cnt") * 5 > col("cat_sum") * 6)
-    storeSales(s, nSales(s, dir))
-      .join(broadcast(dateDim(s)), col("ss_sold_date_sk") === col("d_date_sk"))
-      .where(col("d_year") === 2000 && col("d_moy") === 1)
-      .join(broadcast(pricey), col("ss_item_sk") === col("i_item_sk"))
-      .groupBy(col("i_category"))
-      .agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") >= 10)
-  }
-
-  /** TPC-DS q65-shape: (store, item) pairs whose revenue falls below
-    * half the store's average item revenue. The fact collapses to
-    * (store, item) grain FIRST; the per-store average is a second
-    * store-grain aggregate broadcast back; the below-average cut is
-    * exact integer (rev ≤ avg/2 ⟺ 2·rev·cnt ≤ sum).
-    */
-  def q65(s: SparkSession, dir: String): DataFrame = {
-    val sa = storeSales(s, nSales(s, dir))
-      .groupBy(col("ss_store_sk"), col("ss_item_sk"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("revenue"))
-    val sb = sa.groupBy(col("ss_store_sk").as("st_sk"))
-      .agg(sum(col("revenue")).as("st_sum"), count(lit(1)).as("st_cnt"))
-    sa.join(broadcast(sb), col("ss_store_sk") === col("st_sk"))
-      .where(col("revenue") * col("st_cnt") * 2 <= col("st_sum"))
-      .join(broadcast(item(s)), col("ss_item_sk") === col("i_item_sk"))
-      .select(col("ss_store_sk"), col("i_brand"), col("ss_item_sk"), col("revenue"))
-  }
-
-  /** TPC-DS q98: per-item revenue plus its share of the item's CLASS
-    * revenue. The share window partitions by class over the
-    * item-sized AGGREGATED frame (never fact rows), and the ratio is
-    * integer ppm floor-div so both engines emit identical longs.
-    */
-  def q98(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val agg = storeSales(s, nSales(s, dir))
-      .join(broadcast(dateDim(s)), col("ss_sold_date_sk") === col("d_date_sk"))
-      .where(col("d_year") === 2000)
-      .join(broadcast(item(s)), col("ss_item_sk") === col("i_item_sk"))
-      .groupBy(col("i_item_sk"), col("i_class"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("itemrevenue"))
-    agg
-      .withColumn("class_sum",
-        sum(col("itemrevenue")).over(Window.partitionBy(col("i_class"))))
-      .withColumn("revenueratio_ppm", expr("itemrevenue * 1000000 div class_sum"))
-      .drop("class_sum")
-  }
-
-  /** TPC-DS q59: store weekly revenue compared against the same week
-    * one year later. The fact collapses to (store, week) grain in ONE
-    * aggregate (week is a closed-form floor-div of the date key — no
-    * date join needed), and the year-over-year comparison self-joins
-    * the AGGREGATED 624-row frame, never fact rows; the ratio is
-    * integer ppm floor-div.
-    */
-  def q59(s: SparkSession, dir: String): DataFrame = {
-    val weekly = storeSales(s, nSales(s, dir))
-      .withColumn("wk", expr(s"(ss_sold_date_sk - 1) div 7 + 1"))
-      .groupBy(col("ss_store_sk"), col("wk"))
-      .agg(sum(col("ss_ext_sales_price_c")).as("rev"))
-    val y1 = weekly.where(col("wk") <= 52)
-      .select(col("ss_store_sk").as("store"), col("wk"), col("rev").as("rev1"))
-    val y2 = weekly.where(col("wk") > 52 && col("wk") <= 104)
-      .select(col("ss_store_sk").as("store2"), (col("wk") - 52).as("wk2"),
-        col("rev").as("rev2"))
-    y1.join(y2, col("store") === col("store2") && col("wk") === col("wk2"))
-      .select(col("store"), col("wk"), col("rev1"), col("rev2"))
-      .withColumn("ratio_ppm", expr("rev2 * 1000000 div rev1"))
-  }
-
-  /** TPC-DS q97: store/catalog channel overlap — how many customers
-    * bought in one channel only vs both, inside one month. Both
-    * channels collapse to DISTINCT customer key sets BEFORE the FULL
-    * OUTER join (key sets cross the wire, never fact rows), and the
-    * three counts are conditional aggregates over the join's null
-    * pattern — one row out.
-    */
-  def q97(s: SparkSession, dir: String): DataFrame = {
-    val n = nSales(s, dir)
-    val dd = dateDim(s).where(col("d_year") === 1998 && col("d_moy") === 1)
-    val ss = storeSales(s, n)
-      .join(broadcast(dd), col("ss_sold_date_sk") === col("d_date_sk"))
-      .select(col("ss_customer_sk")).distinct()
-    val cs = catalogSales(s, n)
-      .join(broadcast(dd), col("cs_sold_date_sk") === col("d_date_sk"))
-      .select(col("cs_customer_sk")).distinct()
-    ss.join(cs, col("ss_customer_sk") === col("cs_customer_sk"), "full_outer")
-      .agg(
-        sum(when(col("ss_customer_sk").isNotNull && col("cs_customer_sk").isNull, 1)
-          .otherwise(0)).as("store_only"),
-        sum(when(col("ss_customer_sk").isNull && col("cs_customer_sk").isNotNull, 1)
-          .otherwise(0)).as("catalog_only"),
-        sum(when(col("ss_customer_sk").isNotNull && col("cs_customer_sk").isNotNull, 1)
-          .otherwise(0)).as("both_channels"))
-  }
-
-  /** TPC-DS q50: return-latency histogram per store — returns banded
-    * by days between sale and return (≤30 / 31–60 / >60), counted in
-    * ONE conditional-aggregate pass over the returns (the sale date
-    * rides the return row by construction, so no fact re-join is
-    * needed; the published query joins back through the two date
-    * dims — same bands, one scan here).
-    */
-  def q50(s: SparkSession, dir: String): DataFrame =
-    storeReturns(s, nSales(s, dir))
-      .withColumn("lag_days", col("sr_returned_date_sk")
-        - (col("sr_ticket_number") * 131 % N_DATES + 1))
-      .groupBy(col("sr_store_sk"))
-      .agg(
-        sum(when(col("lag_days") <= 30, 1).otherwise(0)).as("d30"),
-        sum(when(col("lag_days") > 30 && col("lag_days") <= 60, 1).otherwise(0)).as("d31_60"),
-        sum(when(col("lag_days") > 60, 1).otherwise(0)).as("d60plus"),
-        count(lit(1)).as("n_returns"))
-
-  /** TPC-DS q74: customers whose catalog-channel spend grew FASTER
-    * year-over-year than their store-channel spend. Each channel
-    * collapses to (customer, year) grain first; the year pivot rides
-    * each aggregate as conditional sums (one pass per channel — the
-    * q64 single-scan lesson); the growth comparison cross-multiplies
-    * exact integers (cs2/cs1 > ss2/ss1 ⟺ cs2·ss1 > ss2·cs1 under
-    * positive denominators), so no float ever decides membership.
-    */
-  def q74(s: SparkSession, dir: String): DataFrame = {
-    val n = nSales(s, dir)
-    val dd = broadcast(dateDim(s).where(col("d_year").isin(1998, 1999)))
-    def yearPivot(df: DataFrame, dateK: String, custK: String, ext: String,
-        p: String): DataFrame =
-      df.join(dd, col(dateK) === col("d_date_sk"))
-        .groupBy(col(custK).as("cust"))
-        .agg(
-          sum(when(col("d_year") === 1998, col(ext)).otherwise(0L)).as(s"${p}1"),
-          sum(when(col("d_year") === 1999, col(ext)).otherwise(0L)).as(s"${p}2"))
-    val ss = yearPivot(storeSales(s, n), "ss_sold_date_sk", "ss_customer_sk",
-      "ss_ext_sales_price_c", "ss")
-    val cs = yearPivot(catalogSales(s, n), "cs_sold_date_sk", "cs_customer_sk",
-      "cs_ext_sales_price_c", "cs")
-      .withColumnRenamed("cust", "ccust")
-    ss.join(cs, col("cust") === col("ccust"))
-      .where(col("ss1") > 0 && col("cs1") > 0 &&
-        col("cs2") * col("ss1") > col("ss2") * col("cs1"))
-      .select(col("cust"), col("ss1"), col("ss2"), col("cs1"), col("cs2"))
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpcdsgen_q74" -> (q74 _),
-    "q_tpcdsgen_q97" -> (q97 _),
-    "q_tpcdsgen_q50" -> (q50 _),
-    "q_tpcdsgen_q59" -> (q59 _),
-    "q_tpcdsgen_q1"  -> (q1 _),
-    "q_tpcdsgen_q6"  -> (q6 _),
-    "q_tpcdsgen_q65" -> (q65 _),
-    "q_tpcdsgen_q98" -> (q98 _),
-    "q_tpcdsgen_q3"  -> (q3 _),
-    "q_tpcdsgen_q42" -> (q42 _),
-    "q_tpcdsgen_q52" -> (q52 _),
-    "q_tpcdsgen_q55" -> (q55 _),
-    "q_tpcdsgen_q7"  -> (q7 _),
-    "q_tpcdsgen_q93" -> (q93 _))
 
   def oracle: Map[String, String] = Map(
     "q_tpcdsgen_q74" -> (oracleGenSql +

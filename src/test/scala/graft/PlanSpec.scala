@@ -118,7 +118,7 @@ class PlanSpec extends SparkSpec {
 
   test("generated TPC-DS q3 plans the canonical star: one fact range, " +
       "broadcast dims only, the aggregate's exchange is the only shuffle") {
-    val p = plan(operators.TpcdsGen.q3(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q3")(spark, sfDir))
     // both dims broadcast — a SortMergeJoin against a 1000-row dim
     // would mean the stats/threshold wiring broke
     assert(p.contains("BroadcastHashJoin"), p)
@@ -133,7 +133,7 @@ class PlanSpec extends SparkSpec {
 
   test("generated TPC-DS q98's share window runs over the item-sized " +
       "aggregate, never fact rows") {
-    val p = plan(operators.TpcdsGen.q98(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q98")(spark, sfDir))
     // tree section only (up to the first blank line): the Window's
     // subtree must reach a HashAggregate before any scan — i.e. the
     // window consumes the aggregated item frame, not fact rows

@@ -179,9 +179,58 @@ class TpcdsGenSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.q23.matRows")
   }
 
+  /** Scans of each fact table in `df`'s executed plan, by table. */
+  private def factScans(df: DataFrame): Map[String, Int] = {
+    val facts = Seq("store_sales", "store_returns", "catalog_sales", "catalog_returns",
+      "web_sales", "web_returns", "inventory")
+    val p = plan(df)
+    facts.map(f => f -> p.linesIterator.count(l =>
+      l.contains("Location: InMemoryFileIndex") && l.contains(s"/$f.parquet")))
+      .filter(_._2 > 0).toMap
+  }
+
+  /** `df`'s rows with columns in name order, as sorted strings. */
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
+
+  /** The rows that keep a DataFrame body instead of running their text. */
+  private val keptBodies = Set("q2", "q14", "q23", "q64", "q75", "q82").map("q_tpcdsgen_" + _)
+
+  test("the year-over-year folds of q2, q14, q64 and q75 scan each fact table " +
+      "once and return their text's rows") {
+    // sf0.01: at sf0.001 q64's retention cut keeps no row
+    val dir = sfDir.replace("sf0.001", "sf0.01")
+    Seq("q2", "q14", "q64", "q75").map("q_tpcdsgen_" + _).foreach { name =>
+      val body = SparkEntry.queries(name)(spark, dir)
+      val scans = factScans(body)
+      assert(scans.nonEmpty && scans.values.forall(_ == 1),
+        s"$name must read each fact table in one scan, got $scans")
+      val rows = sortedRows(body)
+      assert(rows.nonEmpty, name)
+      assert(rows === sortedRows(SparkEntry.queries(s"${name}_sqltext")(spark, dir)), name)
+    }
+  }
+
+  test("every generator row but the six kept bodies runs its shared SQL text") {
+    import org.apache.spark.sql.catalyst.normalizer.NormalizeCTEIds
+    // each parse numbers its CTEs afresh, so ids are normalized first
+    def sameResult(a: String, b: String): Boolean =
+      Seq(a, b).map(n => NormalizeCTEIds(SparkEntry.queries(n)(spark, sfDir)
+        .queryExecution.analyzed)) match { case Seq(x, y) => x.sameResult(y) }
+    val names = SparkEntry.queries.keySet.filter(_.matches("q_tpcdsgen_q\\d+"))
+    assert(names.size === 99)
+    assert(keptBodies.subsetOf(names))
+    (names -- keptBodies).toSeq.sorted.foreach { name =>
+      assert(sameResult(name, s"${name}_sqltext"),
+        s"$name has a second definition besides its text")
+    }
+    // the comparison tells a body from its text
+    keptBodies.foreach(name => assert(!sameResult(name, s"${name}_sqltext"), name))
+  }
+
   test("q34's basket count collapses at ticket grain with every dim broadcast — " +
       "no sort-merge join anywhere in the plan") {
-    val p = plan(graft.operators.TpcdsGen3.q34(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q34")(spark, sfDir))
     assert(!p.contains("SortMergeJoin"), p)
     assert(p.contains("BroadcastHashJoin"), p)
   }
@@ -229,7 +278,7 @@ class TpcdsGenSpec extends SparkSpec {
 
   test("q88's eight time bands materialize the fact ONCE (the published text " +
       "is eight cross-joined subqueries = eight scans)") {
-    val p = plan(TpcdsGen2.q88(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q88")(spark, sfDir))
     // fact + hd dim + time dim = exactly three sources (parquet scans
     // of the materialized star since r15)
     val scans = p.linesIterator.count(_.contains("Location: InMemoryFileIndex"))
@@ -239,20 +288,20 @@ class TpcdsGenSpec extends SparkSpec {
 
   test("q28's six banded distinct-aggregate triples stay one fact scan " +
       "(multi-distinct rewrites to Expand, not to six subquery scans)") {
-    val p = plan(TpcdsGen2.q28(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q28")(spark, sfDir))
     val scans = p.linesIterator.count(_.contains("Location: InMemoryFileIndex"))
     assert(scans === 1, s"expected the single fact scan, got $scans:\n$p")
     assert(p.contains("Expand"), s"multi-distinct should plan through Expand:\n$p")
   }
 
   test("q49's rank<=10 cut plans as WindowGroupLimit — no channel sorts item-wide") {
-    val p = plan(TpcdsGen2.q49(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q49")(spark, sfDir))
     assert(p.contains("WindowGroupLimit"), p)
   }
 
   test("q66's warehouse report is one pass over the channel union: two fact " +
       "ranges, broadcast dims only") {
-    val p = plan(TpcdsGen2.q66(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q66")(spark, sfDir))
     assert(!p.contains("SortMergeJoin"), p)
     val scans = p.linesIterator.count(_.contains("Location: InMemoryFileIndex"))
     // web fact + catalog fact + ship_mode + date + warehouse
@@ -260,7 +309,7 @@ class TpcdsGenSpec extends SparkSpec {
   }
 
   test("q51's cumulative windows run over (item, week) aggregates, never fact rows") {
-    val p = plan(TpcdsGen2.q51(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q51")(spark, sfDir))
     val tree = p.linesIterator.takeWhile(_.trim.nonEmpty).toSeq
     val windowIdx = tree.indexWhere(_.contains("Window"))
     val firstAgg = tree.indexWhere(_.contains("HashAggregate"))
@@ -270,13 +319,13 @@ class TpcdsGenSpec extends SparkSpec {
 
   test("q72's inventory correlation is a pure equi-join — no nested loop, " +
       "no cartesian, no range residual fan-out") {
-    val p = plan(TpcdsGen2.q72(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q72")(spark, sfDir))
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"the three-key (item, warehouse, week) join must stay hash/merge:\n$p")
   }
 
   test("q77's FULL OUTER legs join unit-grain aggregates, never fact vs fact") {
-    val p = plan(TpcdsGen2.q77(spark, sfDir))
+    val p = plan(SparkEntry.queries("q_tpcdsgen_q77")(spark, sfDir))
     val tree = p.linesIterator.takeWhile(_.trim.nonEmpty).toSeq
     val outerIdx = tree.indexWhere(_.contains("FullOuter"))
     assert(outerIdx >= 0, p)
@@ -374,7 +423,7 @@ class TpcdsGenSpec extends SparkSpec {
 
   test("streaming-shape smoke: the q5 rollup report returns every channel " +
       "with internally consistent totals") {
-    val rows = TpcdsGen2.q5(spark, sfDir)
+    val rows = SparkEntry.queries("q_tpcdsgen_q5")(spark, sfDir)
       .where(col("unit_sk").isNull && col("channel").isNotNull)
       .collect().map(r => r.getString(0) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap
